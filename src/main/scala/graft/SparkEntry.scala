@@ -271,10 +271,11 @@ object SparkEntry {
     "bm25_incremental_topk" -> ((s, dir) =>
       graft.engine.IndexSearch.topKAt(s, ensureIncr(s, dir), QuerySet.df(s))),
 
-    // Block-max WAND directly over the layered root: delta layers' salted
-    // segments serve at full (salt × query) parallelism; base-layer bounds
-    // are avgdl-rescaled (sound upper bound), scoring is exact at the new
-    // avgdl — rank-identical to the naive plan.
+    // Block-max WAND directly over the layered root, through the same
+    // exchange-free route as a single-layer root: each salt shard reads its
+    // cached partition of every layer in one task; base-layer bounds are
+    // avgdl-rescaled (sound upper bound), scoring is exact at the new avgdl
+    // — rank-identical to the naive plan.
     "bm25_wand_incr_topk" -> ((s, dir) =>
       graft.engine.Wand.topKAt(s, ensureIncr(s, dir), QuerySet.all)),
 

@@ -309,53 +309,47 @@ object IndexReader {
     })
   }
 
-  /** Open a root: snapshot metadata when present (its presence is the
-    * completeness watermark for layered roots — a snapshot is only ever
-    * published on completion), else the strict manifest-counting
-    * [[IndexBuilder.open]] for legacy single-layer roots.
+  /** Open a root from its current snapshot. The snapshot is the one
+    * completeness watermark: [[IndexBuilder.build]], addBatch and compact
+    * publish it last, so a root without one is incomplete and refused (a
+    * build that crashed before its publish is finished by re-running the
+    * build, whose completed phases no-op).
     */
-  private def open(spark: SparkSession, paths: IndexPaths): IndexReader =
-    Snapshots.read(paths.root) match {
-      case Some(snap) =>
-        if (snap.segmentsDirs.size != snap.indexDirs.size ||
-            snap.statsPaths.size != snap.indexDirs.size)
-          throw new IllegalStateException(
-            s"snapshot v${snap.version} at ${paths.root} lacks aligned per-layer segments/stats " +
-              s"(pre-v${IndexBuilder.FormatVersion} metadata?) — rebuild the root")
-        val stats = IndexBuilder.readStatsFile(snap.statsPath).getOrElse(
-          throw new IllegalStateException(s"missing stats at ${snap.statsPath}"))
-        if (stats.version != IndexBuilder.FormatVersion)
-          throw new IllegalStateException(
-            s"index at ${paths.root} has format v${stats.version}, reader needs v${IndexBuilder.FormatVersion}")
-        val layers = snap.indexDirs.indices.map { i =>
-          val layerStats = IndexBuilder.readStatsFile(snap.statsPaths(i)).getOrElse(
-            throw new IllegalStateException(s"missing layer stats at ${snap.statsPaths(i)}"))
-          // explicit schemas: an EMPTY delta layer (replayed batch) has no
-          // parquet files to infer from
-          val idx = spark.read.schema(IndexBuilder.IndexSchema)
-            .parquet(snap.indexDirs(i)).persist(StorageLevel.MEMORY_AND_DISK)
-          val seg = pinSegments(spark.read.schema(IndexBuilder.SegmentsSchema)
-            .parquet(snap.segmentsDirs(i)))
-          IndexLayer(i, snap.indexDirs(i), layerStats.avgdl,
-            math.max(1.0, stats.avgdl / layerStats.avgdl), idx, seg)
-        }
-        val docs = pinDocs(snap.docsDirs
-          .map(d => spark.read.schema(IndexBuilder.DocsSchema).parquet(d))
-          .reduce(_ unionByName _))
-        IndexReader(paths, stats, snap.version, layers, docs,
-          cacheTag(paths, stats, snap.version),
-          fastFor(spark, Some(snap.indexDirs.last)))
-
-      case None =>
-        val stats = IndexBuilder.open(paths)
-        val idx = spark.read.parquet(paths.indexDir).persist(StorageLevel.MEMORY_AND_DISK)
-        val seg = pinSegments(
-          spark.read.schema(IndexBuilder.SegmentsSchema).parquet(paths.segmentsDir))
-        val docs = pinDocs(spark.read.schema(IndexBuilder.DocsSchema).parquet(paths.docsDir))
-        IndexReader(paths, stats, 0,
-          Seq(IndexLayer(0, paths.indexDir, stats.avgdl, 1.0, idx, seg)),
-          docs, cacheTag(paths, stats, 0), fastFor(spark, Some(paths.indexDir)))
+  private def open(spark: SparkSession, paths: IndexPaths): IndexReader = {
+    val snap = Snapshots.read(paths.root).getOrElse(throw new IllegalStateException(
+      s"index at ${paths.root} incomplete: no published snapshot"))
+    if (snap.segmentsDirs.size != snap.indexDirs.size ||
+        snap.statsPaths.size != snap.indexDirs.size)
+      throw new IllegalStateException(
+        s"snapshot v${snap.version} at ${paths.root} lacks aligned per-layer segments/stats " +
+          s"(pre-v${IndexBuilder.FormatVersion} metadata?) — rebuild the root")
+    val stats = IndexBuilder.readStatsFile(snap.statsPath).getOrElse(
+      throw new IllegalStateException(s"missing stats at ${snap.statsPath}"))
+    if (stats.version != IndexBuilder.FormatVersion)
+      throw new IllegalStateException(
+        s"index at ${paths.root} has format v${stats.version}, reader needs v${IndexBuilder.FormatVersion}")
+    // one salt width for every layer, read once: the WAND route zips the
+    // layers' cached partitions, which only align at equal widths
+    val saltWidth = spark.conf.get("spark.sql.shuffle.partitions").toInt
+    val layers = snap.indexDirs.indices.map { i =>
+      val layerStats = IndexBuilder.readStatsFile(snap.statsPaths(i)).getOrElse(
+        throw new IllegalStateException(s"missing layer stats at ${snap.statsPaths(i)}"))
+      // explicit schemas: an EMPTY delta layer (replayed batch) has no
+      // parquet files to infer from
+      val idx = spark.read.schema(IndexBuilder.IndexSchema)
+        .parquet(snap.indexDirs(i)).persist(StorageLevel.MEMORY_AND_DISK)
+      val seg = pinSegments(spark.read.schema(IndexBuilder.SegmentsSchema)
+        .parquet(snap.segmentsDirs(i)), saltWidth)
+      IndexLayer(i, snap.indexDirs(i), layerStats.avgdl,
+        math.max(1.0, stats.avgdl / layerStats.avgdl), idx, seg)
     }
+    val docs = pinDocs(snap.docsDirs
+      .map(d => spark.read.schema(IndexBuilder.DocsSchema).parquet(d))
+      .reduce(_ unionByName _))
+    IndexReader(paths, stats, snap.version, layers, docs,
+      cacheTag(paths, stats, snap.version),
+      fastFor(spark, Some(snap.indexDirs.last)))
+  }
 
   /** Pin the docs sidecar hash-partitioned AND sorted by `doc_id` (guide
     * §2.4: two operations keyed the same way share one exchange — a cached
@@ -370,16 +364,17 @@ object IndexReader {
   private def pinDocs(docs: DataFrame): DataFrame =
     persistPartitioned(docs.repartition(col("doc_id")).sortWithinPartitions("doc_id"))
 
-  /** Pin a segments layer hash-partitioned by `salt` (every row of a salt
-    * shard in exactly one cached partition — the invariant the single-layer
+  /** Pin a segments layer hash-partitioned by `salt` at `width` partitions
+    * (every row of a salt shard in exactly one cached partition, at the
+    * same partition index in every layer of the root — the invariant the
     * WAND mapPartitions route relies on: one task sees ALL of a (salt,
-    * query)'s term rows, so shard runs stay docId-disjoint) and sorted by
-    * (salt, bucket, term) so the in-memory batch min/max stats keep the
-    * per-query bucket/term filters prunable.
+    * query)'s term rows across layers, so shard runs stay docId-disjoint)
+    * and sorted by (salt, bucket, term) so the in-memory batch min/max
+    * stats keep the per-query bucket/term filters prunable.
     */
-  private def pinSegments(segs: DataFrame): DataFrame =
+  private def pinSegments(segs: DataFrame, width: Int): DataFrame =
     persistPartitioned(
-      segs.repartition(col("salt")).sortWithinPartitions("salt", "bucket", "term"))
+      segs.repartition(width, col("salt")).sortWithinPartitions("salt", "bucket", "term"))
 
   /** Persist with the partitioning/ordering STATICALLY visible to consumers.
     * Under AQE (Spark 4 default) a cached query compiles as an

@@ -54,14 +54,10 @@ object Incremental {
       outPaths: IndexPaths): IndexStats = {
     def phase[A](name: String)(f: => A): A = IndexBuilder.phase(name, tag = "add")(f)
     // a snapshot is only ever published on completion, so its presence is
-    // the completeness watermark for layered roots (delta outputs have no
-    // salt manifests of their own); legacy single-layer roots fall back to
-    // the strict manifest-counting open().
-    val baseLayers = Snapshots.read(basePaths.root).getOrElse {
-      IndexBuilder.open(basePaths)
-      Snapshot(1, Seq(basePaths.indexDir), Seq(basePaths.docsDir),
-        Seq(basePaths.segmentsDir), Seq(basePaths.statsPath), basePaths.statsPath, None)
-    }
+    // the completeness watermark for every root (delta outputs have no salt
+    // manifests of their own)
+    val baseLayers = Snapshots.read(basePaths.root).getOrElse(throw new IllegalStateException(
+      s"addBatch: base at ${basePaths.root} incomplete: no published snapshot"))
     // fail fast on a pre-v4 or malformed base BEFORE any expensive phase:
     // a snapshot without aligned per-layer segments/stats would merge fine
     // but publish a root no reader can ever open

@@ -239,17 +239,19 @@ object IndexBuilder {
   }
 
   /** A build is complete iff stats exist at the current format version,
-    * every salt has its manifest, and the v7 sidecar artifacts (fast
-    * prefixes, stored edges) are published — the completeness watermark
-    * (ST5). Each build phase is individually `_SUCCESS`-guarded, so a root
-    * failing only the sidecar checks re-runs [[build]] cheaply: completed
-    * phases no-op and only the missing artifacts are produced.
+    * every salt has its manifest, the v7 sidecar artifacts (fast prefixes,
+    * stored edges) are published, and the snapshot — written last, the
+    * completeness watermark (ST5) readers open through — exists. Each build
+    * phase is individually `_SUCCESS`-guarded, so a root failing any of
+    * these checks re-runs [[build]] cheaply: completed phases no-op and
+    * only the missing artifacts (at least the snapshot) are produced.
     */
   def isComplete(paths: IndexPaths, numSalts: Int = DefaultNumSalts): Boolean =
     readStats(paths).exists(s => s.version == FormatVersion && s.numSalts == numSalts) &&
       completedSalts(paths) == (0 until numSalts).toSet &&
       Files.exists(Paths.get(s"${paths.fastDir}/_SUCCESS")) &&
-      Files.exists(Paths.get(s"${paths.edgesDir}/_SUCCESS"))
+      Files.exists(Paths.get(s"${paths.edgesDir}/_SUCCESS")) &&
+      Snapshots.read(paths.root).isDefined
 
   /** The ONE recursive-delete helper — Bench.deleteTree and the streaming
     * changelog cleanup delegate here (single source of truth for
@@ -612,7 +614,8 @@ object IndexBuilder {
     if (!isComplete(paths, numSalts)) {
       val missing = (0 until numSalts).toSet -- completedSalts(paths)
       throw new IllegalStateException(
-        s"index at ${paths.root} incomplete: missing salt manifests ${missing.toSeq.sorted.mkString(",")}")
+        s"index at ${paths.root} incomplete: missing salt manifests " +
+          s"[${missing.toSeq.sorted.mkString(",")}], artifacts or published snapshot")
     }
     readStats(paths).get
   }

@@ -133,17 +133,14 @@ object LinkIndex {
   /** The logical edge relation at `root`: newest layer wins per `src_id`
     * (the same resolution shape as the postings' newest-wins-per-term).
     * Layer list comes from the snapshot's index dirs — `edges` is always
-    * the sibling artifact ([[IndexPaths.edgesDirFor]]); single-layer roots
-    * without snapshot metadata read `root/edges` directly.
+    * the sibling artifact ([[IndexPaths.edgesDirFor]]).
     */
-  def readMergedEdges(spark: SparkSession, root: String): DataFrame =
-    Snapshots.read(root) match {
-      case Some(snap) =>
-        snap.indexDirs
-          .map(d => readLayerEdges(spark, IndexPaths.edgesDirFor(d)))
-          .reduceRight((older, newer) =>
-            older.join(newer.select("src_id"), Seq("src_id"), "left_anti").unionByName(newer))
-      case None =>
-        readLayerEdges(spark, IndexPaths(root).edgesDir)
-    }
+  def readMergedEdges(spark: SparkSession, root: String): DataFrame = {
+    val snap = Snapshots.read(root).getOrElse(throw new IllegalStateException(
+      s"index at $root incomplete: no published snapshot"))
+    snap.indexDirs
+      .map(d => readLayerEdges(spark, IndexPaths.edgesDirFor(d)))
+      .reduceRight((older, newer) =>
+        older.join(newer.select("src_id"), Seq("src_id"), "left_anti").unionByName(newer))
+  }
 }

@@ -23,14 +23,16 @@ object Tokenizer {
   val SplitRegex: String = "[^a-z0-9_]+"
 
   /** Normalize one query/lookup term exactly like index-time tokens.
-    * Lowering consistency: every path lowers with the same semantics —
-    * Spark's `lower()`/UTF8String.toLowerCase take an ASCII fast path and
-    * fall back to java.lang.String.toLowerCase (default locale), which is
-    * exactly what the scan tokenizers call — so a non-default JVM locale
-    * shifts ALL paths together, never one side of a parity pair
-    * (TokenCountParitySpec exercises the non-ASCII lower-into-class cases).
+    * Every Scala-side lowering (this, the scan tokenizers and
+    * [[TokenCount]]) uses `Locale.ROOT`, like DuckDB's locale-free `lower`.
+    * Default-locale lowering differs even on ASCII: under `tr_TR`, 'I'
+    * lowers to dotless 'ı', which is not a token char, so "aIb" would split
+    * into two tokens (TokenizerSpec pins dl ≡ tokenCountCol under `tr_TR`).
+    * Spark's `lower()` ([[tokensCol]]) is locale-free on ASCII-only strings
+    * but falls back to the default locale on non-ASCII ones, so it agrees
+    * with the other paths only under a default locale that lowers like ROOT.
     */
-  def normalizeTerm(t: String): String = t.toLowerCase
+  def normalizeTerm(t: String): String = t.toLowerCase(java.util.Locale.ROOT)
 
   /** Array-of-tokens column for a content column (empties filtered). */
   def tokensCol(content: Column): Column =
@@ -51,9 +53,9 @@ object Tokenizer {
     * separator runs partitions the string, and the non-empty pieces are
     * precisely the maximal token-char runs. Lowering first matters even for
     * counting (a non-ASCII char can lower INTO the token class, e.g.
-    * U+212A → 'k', joining two runs), so this scans `UTF8String.toLowerCase`
-    * — the same lowering `lower()` applies — byte-wise: token bytes are
-    * ASCII, UTF-8 continuation/lead bytes are ≥ 0x80 and never token chars.
+    * U+212A → 'k', joining two runs), so this scans the lowered string
+    * byte-wise: token bytes are ASCII, UTF-8 continuation/lead bytes are
+    * ≥ 0x80 and never token chars.
     */
   def countTokens(lowered: UTF8String): Int = {
     val bytes = lowered.getBytes
@@ -108,8 +110,8 @@ object Tokenizer {
           // to Pattern.split(SplitRegex) with empties dropped (splitting on
           // maximal separator runs partitions the string; the non-empty
           // pieces ARE the token runs), without the regex engine or the
-          // token-array materialization. Same Java toLowerCase as before.
-          val s = content.toLowerCase
+          // token-array materialization.
+          val s = content.toLowerCase(java.util.Locale.ROOT)
           val counts = new java.util.HashMap[String, Int]()
           var dl = 0L
           var i = 0
@@ -156,7 +158,7 @@ object Tokenizer {
         val byLen = needles.groupBy(_.length)
         val maxLen = if (needles.isEmpty) 0 else needles.map(_.length).max
         it.flatMap { case (docId, content) =>
-          val s = content.toLowerCase
+          val s = content.toLowerCase(java.util.Locale.ROOT)
           val counts = new Array[Int](needles.length)
           var dl = 0L
           var i = 0
@@ -221,8 +223,14 @@ final case class TokenCount(child: org.apache.spark.sql.catalyst.expressions.Exp
     org.apache.spark.sql.types.IntegerType
   override def prettyName: String = "token_count"
 
-  override protected def nullSafeEval(input: Any): Any =
-    Tokenizer.countTokens(input.asInstanceOf[UTF8String].toLowerCase)
+  // UTF8String.toLowerCase lowers non-ASCII strings in the default locale;
+  // those take the root-locale String path the scan tokenizers use
+  override protected def nullSafeEval(input: Any): Any = {
+    val s = input.asInstanceOf[UTF8String]
+    Tokenizer.countTokens(
+      if (s.isFullAscii) s.toLowerCase
+      else UTF8String.fromString(s.toString.toLowerCase(java.util.Locale.ROOT)))
+  }
 
   override protected def withNewChildInternal(
       newChild: org.apache.spark.sql.catalyst.expressions.Expression): TokenCount =

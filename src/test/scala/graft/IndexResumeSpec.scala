@@ -44,6 +44,12 @@ class IndexResumeSpec extends AnyFunSuite with BeforeAndAfterAll {
       .sortBy(_._1).toSeq
   }
 
+  /** path → mtime of every file under `dir` (0 for directories). */
+  private def mtimes(dir: String): Map[String, Long] =
+    Files.walk(Paths.get(dir)).iterator().asScala
+      .map(f => f.toString -> (if (Files.isRegularFile(f)) Files.getLastModifiedTime(f).toMillis else 0L))
+      .toMap
+
   private def deleteTree(p: String): Unit = {
     val path = Paths.get(p)
     if (Files.exists(path))
@@ -76,16 +82,37 @@ class IndexResumeSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(Files.readString(Paths.get(s"${pA.manifestsDir}/salt-0.json")) == untouchedBefore)
 
     // idempotent rerun: completed build → no segment file changes at all
-    val listing = Files.walk(Paths.get(pA.segmentsDir)).iterator().asScala
-      .map(p => p.toString -> (if (Files.isRegularFile(p)) Files.getLastModifiedTime(p).toMillis else 0L))
-      .toMap
+    val listing = mtimes(pA.segmentsDir)
     IndexBuilder.build(spark, corpus, pA)
-    val listing2 = Files.walk(Paths.get(pA.segmentsDir)).iterator().asScala
-      .map(p => p.toString -> (if (Files.isRegularFile(p)) Files.getLastModifiedTime(p).toMillis else 0L))
-      .toMap
-    assert(listing2 == listing, "completed build rewrote segment files")
+    assert(mtimes(pA.segmentsDir) == listing, "completed build rewrote segment files")
 
     deleteTree(rootA)
+  }
+
+  test("a root without its snapshot is incomplete, refused, and finished by build") {
+    // a crash between the stats write and the snapshot publish leaves every
+    // artifact in place but no snapshot: the root must not serve, and a
+    // re-run build must finish it by publishing the snapshot (no rewrite)
+    val corpus = Corpus.corpus(spark, sfDir)
+    val root = Files.createTempDirectory("graft-nosnap").toString
+    val p = IndexPaths(root)
+    IndexBuilder.build(spark, corpus, p)
+    def served(): Seq[org.apache.spark.sql.Row] =
+      graft.engine.Wand.topKAt(spark, p, graft.queries.QuerySet.all).collect().toSeq
+    val before = served()
+    assert(before.nonEmpty)
+
+    graft.engine.IndexReader.invalidate(root) // a fresh process holds no reader
+    deleteTree(graft.index.Snapshots.metadataDir(root))
+    assert(!IndexBuilder.isComplete(p))
+    intercept[IllegalStateException] { graft.engine.IndexReader.get(spark, p) }
+
+    val segments = mtimes(p.segmentsDir)
+    IndexBuilder.build(spark, corpus, p)
+    assert(IndexBuilder.isComplete(p))
+    assert(mtimes(p.segmentsDir) == segments, "finishing the build rewrote segment files")
+    assert(served() == before, "the finished root serves different rows")
+    deleteTree(root)
   }
 
   test("cross-format resume wipes stale artifacts instead of re-stamping them") {

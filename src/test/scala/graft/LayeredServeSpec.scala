@@ -159,6 +159,51 @@ class LayeredServeSpec extends AnyFunSuite with BeforeAndAfterAll {
       decodeCounts(spark.read.parquet(fullPaths.indexDir)))
   }
 
+  // a 2-layer root for the route-shape specs below
+  private lazy val twoLayer: IndexPaths = {
+    val basePaths = IndexPaths(s"$root/route-base")
+    val outPaths = IndexPaths(s"$root/route-out")
+    IndexBuilder.build(spark, corpusOf(baseDocs), basePaths, buildArgs = "route-spec-base")
+    Incremental.addBatch(spark, basePaths, corpusOf(baseDocs ++ deltaDocs), outPaths)
+    outPaths
+  }
+
+  test("layered WAND runs one exchange-free candidate route; the ranking tail's query_id exchange is the only shuffle") {
+    val df = Wand.topKAt(spark, twoLayer, queries)
+    val naive = rows(graft.engine.NaiveSearch.topK(spark, corpusOf(baseDocs ++ deltaDocs), queriesDf))
+    assert(rows(df) === naive)
+    // the executed (final adaptive) plan; cached relations are leaves here,
+    // so their own pinning exchanges are not counted
+    object Plans extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    val plan = df.queryExecution.executedPlan
+    val names = Plans.collect(plan) { case n => n.nodeName }
+    assert(!names.exists(n => n.startsWith("MapGroups") || n.startsWith("AppendColumns")),
+      s"layered WAND still groups by key:\n$plan")
+    val shuffles = Plans.collect(plan) {
+      case e: org.apache.spark.sql.execution.exchange.ShuffleExchangeLike => e.outputPartitioning
+    }
+    assert(shuffles.nonEmpty, s"no ranking-tail exchange found:\n$plan")
+    shuffles.foreach {
+      case org.apache.spark.sql.catalyst.plans.physical.HashPartitioning(
+          Seq(a: org.apache.spark.sql.catalyst.expressions.Attribute), _) if a.name == "query_id" =>
+      case other => fail(s"unexpected exchange $other:\n$plan")
+    }
+  }
+
+  test("layered WAND refuses a union that does not zip the layers per salt") {
+    // s6 reads one term from each layer, so its candidate input is a union
+    val key = "spark.sql.unionOutputPartitioning"
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, "false")
+    try {
+      val e = intercept[IllegalStateException](Wand.topKAt(spark, twoLayer, queries))
+      assert(e.getMessage.contains("salt"))
+    } finally prev match {
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
+    }
+  }
+
   test("addBatchCompacting bounds the layer count and keeps query identity") {
     val basePaths = IndexPaths(s"$root/pol-base")
     IndexBuilder.build(spark, corpusOf(baseDocs), basePaths, buildArgs = "policy-base")

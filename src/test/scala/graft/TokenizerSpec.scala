@@ -42,6 +42,37 @@ class TokenizerSpec extends AnyFunSuite {
     assert(BM25.quantize(0.0000004) == 0.0)
     assert(BM25.quantize(0.0000006) == 0.000001)
   }
+
+  test("dl == tokenCountCol under a tr_TR default locale") {
+    // default-locale lowering turns ASCII 'I' into dotless 'ı' (not a
+    // token char) under tr_TR: "aIb" must stay ONE token on every path
+    import graft.tokenize.Tokenizer
+    import org.apache.spark.sql.functions.col
+    val spark = org.apache.spark.sql.SparkSession.builder().master("local[2]")
+      .config("spark.sql.shuffle.partitions", "2")
+      .config("spark.ui.enabled", "false").getOrCreate()
+    spark.sparkContext.setLogLevel("ERROR")
+    val prev = java.util.Locale.getDefault
+    try {
+      import spark.implicits._
+      val c = Seq((1L, "aIb"), (2L, "FIND the Index"), (3L, "x I y"), (4L, "aIb é İ"))
+        .toDF("doc_id", "content")
+      java.util.Locale.setDefault(java.util.Locale.forLanguageTag("tr-TR"))
+      val counts = c.select(col("doc_id"), Tokenizer.tokenCountCol(col("content")).cast("long"))
+        .as[(Long, Long)].collect().toMap
+      val dl = Tokenizer.termFreqsWithDl(c).select("doc_id", "dl").distinct()
+        .as[(Long, Long)].collect().toMap
+      val dlRestricted = Tokenizer.termFreqsRestricted(c, Seq("aib", "find", "x")).select("doc_id", "dl")
+        .distinct().as[(Long, Long)].collect().toMap
+      assert(counts === Map(1L -> 1L, 2L -> 3L, 3L -> 3L, 4L -> 2L))
+      assert(dl === counts)
+      assert(dlRestricted === counts)
+      assert(Tokenizer.normalizeTerm("FIND") === "find")
+    } finally {
+      java.util.Locale.setDefault(prev)
+      spark.stop()
+    }
+  }
 }
 
 /** The shuffle-free map-side tokenizer must equal the built-in
